@@ -63,6 +63,7 @@ from empdia_iceberg_spark.tables.manager import (
     DEFAULT_ROOT,
     SnapshotTable,
     canonical_transform,
+    list_versions,
     scratch_root,
 )
 
@@ -501,14 +502,7 @@ def _views_dir(root: str, name: str | None = None) -> str:
 
 
 def _view_versions(root: str, name: str) -> list[int]:
-    import os as _os
-
-    d = _views_dir(root, name)
-    if not _os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[1:6]) for f in _os.listdir(d) if f.startswith("v") and f.endswith(".json")
-    )
+    return list_versions(_views_dir(root, name))
 
 
 def _view_sql(root: str, name: str) -> str | None:

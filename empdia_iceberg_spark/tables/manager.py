@@ -38,6 +38,7 @@ import re
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -298,6 +299,41 @@ class CommitConflictError(RuntimeError):
     semantics). Callers re-read the table and retry."""
 
 
+@dataclass
+class PendingCommit:
+    """A writer's proposed snapshot, built against the parent that
+    `SnapshotTable._occ` read. Metadata left as None is carried from
+    the parent; `written` lists the dirs this attempt wrote, removed if
+    the commit loses the race; a non-None `audit` makes the commit
+    return (version, audit) instead of the bare version."""
+
+    op: str
+    dirs: list[str] | None = None
+    schema: str | None = None
+    spec: list[str] | None = None
+    dir_specs: list[list[str]] | None = None
+    delete_dirs: list[dict] | None = None
+    extra: dict | None = None
+    written: list[str] = field(default_factory=list)
+    audit: dict | None = None
+
+
+_VERSION_FILE = re.compile(r"v(\d+)\.json")
+
+
+def list_versions(d: str) -> list[int]:
+    """Sorted version numbers of the ``v<N>.json`` files in ``d``. The
+    names are zero-padded to five digits, so v100000 has six: parse the
+    whole number, never a fixed slice."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        int(m.group(1))
+        for m in map(_VERSION_FILE.fullmatch, os.listdir(d))
+        if m
+    )
+
+
 def _acquire_excl_lock(
     lock: str, what: str, attempts: int = 4000, sleep_s: float = 0.005,
 ) -> int:
@@ -342,13 +378,7 @@ class SnapshotTable:
     # ------------------------------------------------------------- metadata
 
     def _versions(self) -> list[int]:
-        if not os.path.isdir(self.meta_dir):
-            return []
-        return sorted(
-            int(f[1:6])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        return list_versions(self.meta_dir)
 
     def _read_meta(self, version: int) -> dict:
         with open(os.path.join(self.meta_dir, f"v{version:05d}.json")) as f:
@@ -364,7 +394,6 @@ class SnapshotTable:
         dir_specs: list[list[str]] | None = None,
         expect_parent: int | None = None,
         delete_dirs: list[dict] | None = None,
-        retry_on_race: bool = False,
         extra: dict | None = None,
     ) -> int:
         # Table-level governance metadata (TBLPROPERTIES, CHECK
@@ -421,7 +450,8 @@ class SnapshotTable:
         # slot is taken (POSIX-atomic), so exactly one writer wins each
         # version number — the Iceberg catalog swap.
         while True:
-            latest = self._versions()[-1] if self._versions() else None
+            vs = self._versions()
+            latest = vs[-1] if vs else None
             if expect_parent is not None and latest != expect_parent:
                 # Optimistic concurrency (Iceberg commit semantics): the
                 # caller built its file list against `expect_parent`; if the
@@ -462,23 +492,88 @@ class SnapshotTable:
                 os.link(tmp, final)  # atomic create; EEXIST = lost the race
                 return version
             except FileExistsError:
-                if expect_parent is not None or not retry_on_race:
-                    # Append-shaped commits (the dirs list extends a parent's)
-                    # must NOT auto-retry a lost publish race: the loop would
-                    # republish the caller's now-stale dirs under the next
-                    # version, silently dropping the concurrent winner's new
-                    # dir. Surface the conflict; the caller rebuilds its dir
-                    # list against the fresh head (append_checked does).
+                if expect_parent is not None:
+                    # A commit built against a declared parent must NOT
+                    # re-sequence a lost publish race: it would republish
+                    # a now-stale dirs list under the next version,
+                    # silently dropping the concurrent winner's files.
+                    # Surface the conflict; _occ rebuilds on the new head.
                     raise CommitConflictError(
                         f"table {self.name}: v{version} was committed by a "
                         "concurrent writer during publish — retry"
                     )
-                # whole-table-replacing op (create/overwrite/compact/rollback):
-                # last-writer-wins by re-sequencing is the declared semantics
+                # whole-table replacement (create/overwrite/truncate/
+                # rollback/branch snapshots): last-writer-wins by
+                # re-sequencing is the declared semantics
                 continue
             finally:
                 if os.path.exists(tmp):
                     os.unlink(tmp)
+
+    def _occ(
+        self, what: str, attempt, max_retries: int = 3, branch: str | None = None
+    ):
+        """The optimistic-commit loop every snapshot-table writer shares
+        (the Iceberg commit protocol: build against a base, swap
+        atomically, on conflict retry against the new head).
+
+        Each iteration reads the head ``cur`` (a ValueError names a
+        table with no snapshot) and its metadata, then calls
+        ``attempt(cur, meta)``. A PendingCommit result is published
+        with ``expect_parent=cur``: such a snapshot carries the
+        parent's dirs and delete files by reference, so republishing it
+        over a head that moved on would silently drop the concurrent
+        writer's files. On CommitConflictError its written dirs are
+        removed (they belong to no snapshot, so expire/GC would never
+        reclaim them) and the attempt reruns on the fresh head. Any
+        other result is a no-op, returned without a commit.
+
+        With ``branch`` the head is that ref, not the table's latest:
+        the snapshot re-sequences into the shared log (it never
+        republishes the latest's dirs) and the ref advances by
+        compare-and-swap; if the ref moved first, the attempt rebuilds
+        on the new ref head and the superseded snapshot stays in the
+        log as history."""
+        for _ in range(max_retries + 1):
+            cur = self.get_ref(branch) if branch else self.current_version()
+            if cur is None:
+                raise ValueError(f"table {self.name}: cannot {what} before create")
+            meta = self._read_meta(cur)
+            p = attempt(cur, meta)
+            if not isinstance(p, PendingCommit):
+                return p
+            try:
+                version = self._commit(
+                    p.op,
+                    meta["dirs"] if p.dirs is None else p.dirs,
+                    cur,
+                    meta["schema"] if p.schema is None else p.schema,
+                    spec=meta.get("spec", []) if p.spec is None else p.spec,
+                    dir_specs=(
+                        self._dir_specs(meta) if p.dir_specs is None else p.dir_specs
+                    ),
+                    expect_parent=None if branch else cur,
+                    delete_dirs=(
+                        meta.get("delete_dirs", [])
+                        if p.delete_dirs is None
+                        else p.delete_dirs
+                    ),
+                    extra=p.extra,
+                )
+            except CommitConflictError:
+                for d in p.written:
+                    shutil.rmtree(d, ignore_errors=True)
+                continue
+            if branch:
+                try:
+                    self.set_ref(branch, version, expect=cur)
+                except CommitConflictError:
+                    continue
+            return version if p.audit is None else (version, p.audit)
+        raise CommitConflictError(
+            f"table {self.name}: cannot {what} — lost the commit race "
+            f"{max_retries + 1} times"
+        )
 
     def snapshots(self) -> list[dict]:
         return [self._read_meta(v) for v in self._versions()]
@@ -510,7 +605,8 @@ class SnapshotTable:
     # ------------------------------------------------------------ write ops
 
     def _write_data(self, df: DataFrame, spec: list[str] | None = None) -> str:
-        version = (self._versions()[-1] + 1) if self._versions() else 1
+        vs = self._versions()
+        version = vs[-1] + 1 if vs else 1
         # uuid suffix (Iceberg file-UUID pattern): racing writers that both
         # derive `version` from the same stale read still write DISJOINT
         # dirs, so a loser's cleanup (rmtree on conflict) can never delete
@@ -644,109 +740,56 @@ class SnapshotTable:
         spec = self._validate_spec(partition_by or [], df.schema)
         d = self._write_data(df, spec)
         return self._commit(
-            "create", [d], None, df.schema.json(), spec=spec, dir_specs=[spec],
-            retry_on_race=True,
+            "create", [d], None, df.schema.json(), spec=spec, dir_specs=[spec]
         )
 
     def append(self, df: DataFrame) -> int:
-        cur = self.current_version()
-        if cur is None:
-            return self.create(df)
-        meta = self._read_meta(cur)
-        spec = meta.get("spec", [])
-        df, schema_json = self._align_append_to_schema(df, meta["schema"])
-        self._enforce_constraints(df, meta)
-        d = self._write_data(self._to_physical(df, schema_json), spec)
-        try:
-            return self._commit(
-                "append",
-                meta["dirs"] + [d],
-                cur,
-                schema_json,
-                spec=spec,
-                dir_specs=self._dir_specs(meta) + [spec],
-                delete_dirs=meta.get("delete_dirs", []),
-            )
-        except CommitConflictError:
-            # lost the publish race: the new dir is in no snapshot, so
-            # expire/GC would never reclaim it — clean up before
-            # surfacing the conflict (mirrors append_checked)
-            shutil.rmtree(d, ignore_errors=True)
-            raise
+        """Append without retry: a writer that lands between this
+        append's read and its publish makes it raise
+        CommitConflictError (its written dir removed) rather than drop
+        that writer's files. append_checked retries instead."""
+        return self.append_checked(df, max_retries=0)
 
-    def append_checked(self, df: DataFrame, max_retries: int = 3) -> int:
-        """Append with optimistic-concurrency conflict detection: the
-        commit declares the parent it was built on; if another writer
-        advanced the table between read and commit, CommitConflictError
-        fires and the append is REBUILT against the fresh state (data
-        is rewritten under the new version — file lists are immutable).
-        This is the Iceberg commit loop."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                return self.create(df)
-            meta = self._read_meta(cur)
+    def _append_attempt(self, df: DataFrame, op: str = "append"):
+        """The append a writer builds against a parent snapshot: the
+        frame conformed to the parent schema and checked against its
+        constraints, written under its spec as one more dir."""
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             spec = meta.get("spec", [])
             aligned, schema_json = self._align_append_to_schema(df, meta["schema"])
             self._enforce_constraints(aligned, meta)
             d = self._write_data(self._to_physical(aligned, schema_json), spec)
-            try:
-                return self._commit(
-                    "append",
-                    meta["dirs"] + [d],
-                    cur,
-                    schema_json,
-                    spec=spec,
-                    dir_specs=self._dir_specs(meta) + [spec],
-                    # parent dirs ride by reference ⇒ so must the
-                    # parent's MOR delete files (plain append() does this;
-                    # omitting them here would resurrect deleted rows)
-                    delete_dirs=meta.get("delete_dirs", []),
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(d, ignore_errors=True)  # orphaned write
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: gave up after {max_retries} retries"
-        )
+            return PendingCommit(
+                op,
+                dirs=meta["dirs"] + [d],
+                schema=schema_json,
+                dir_specs=self._dir_specs(meta) + [spec],
+                written=[d],
+            )
+
+        return attempt
+
+    def append_checked(self, df: DataFrame, max_retries: int = 3) -> int:
+        """Append through the commit loop: a concurrent writer makes it
+        rebuild against the fresh head (data is rewritten under the new
+        version — file lists are immutable). Creates a missing table."""
+        if self.current_version() is None:
+            return self.create(df)
+        return self._occ("append", self._append_attempt(df), max_retries)
 
     def evolve_partitioning(self, partition_by: list[str], max_retries: int = 3) -> int:
         """Iceberg partition-spec evolution: change the partitioning of
         FUTURE writes only. Existing data dirs keep their layout (their
-        spec stays recorded in dir_specs); no data is rewritten.
+        spec stays recorded in dir_specs); no data is rewritten."""
 
-        Append-shaped OCC (same window as merge): the commit carries the
-        parent's dirs by reference, so it declares expect_parent and
-        rebuilds against the fresh head on conflict — republishing a
-        stale dirs list would drop a concurrent writer's files."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot evolve before create")
-            meta = self._read_meta(cur)
-            partition_by = self._validate_spec(
-                partition_by, T.StructType.fromJson(json.loads(meta["schema"]))
+        def attempt(cur: int, meta: dict) -> PendingCommit:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
+            return PendingCommit(
+                "evolve-partitioning", spec=self._validate_spec(partition_by, schema)
             )
-            try:
-                return self._commit(
-                    "evolve-partitioning",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=partition_by,
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    # dirs are carried by reference, so the parent's MOR
-                    # delete files must ride along — dropping them here
-                    # would resurrect every MOR-deleted row at next read
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: evolve gave up after {max_retries} retries"
-        )
+
+        return self._occ("evolve", attempt, max_retries)
 
     def add_column(
         self,
@@ -765,9 +808,7 @@ class SnapshotTable:
 
         ``sql_type`` is a DDL type string (``string``, ``decimal(12,2)``,
         ``array<double>``, ...) parsed by Spark itself via an empty
-        createDataFrame — no hand-rolled type grammar. Append-shaped OCC
-        like evolve_partitioning: dirs ride by reference, so the commit
-        declares expect_parent and retries against the fresh head.
+        createDataFrame — no hand-rolled type grammar.
 
         ``default`` (r13, the Iceberg-v3 initial-default model): a SQL
         literal expression. Files written BEFORE the evolve surface the
@@ -788,13 +829,8 @@ class SnapshotTable:
             self.spark.createDataFrame([], "dummy int").select(
                 F.expr(default).cast(field.dataType)
             )
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot add a column before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col in schema.fieldNames():
                 raise ValueError(
@@ -832,8 +868,9 @@ class SnapshotTable:
                         "re-adding the name would resurrect them; use a new "
                         "name or rewrite the table"
                     )
+            added = field
             if default is not None:
-                field = T.StructField(
+                added = T.StructField(
                     field.name,
                     field.dataType,
                     True,
@@ -846,23 +883,10 @@ class SnapshotTable:
                         "default_pre_dirs": list(meta["dirs"]),
                     },
                 )
-            evolved = T.StructType(list(schema.fields) + [field])
-            try:
-                return self._commit(
-                    "add-column",
-                    meta["dirs"],
-                    cur,
-                    evolved.json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: add_column gave up after {max_retries} retries"
-        )
+            evolved = T.StructType(list(schema.fields) + [added])
+            return PendingCommit("add-column", schema=evolved.json())
+
+        return self._occ("add a column", attempt, max_retries)
 
     def drop_column(self, col: str, max_retries: int = 3) -> int:
         """Iceberg `ALTER TABLE ... DROP COLUMN`: METADATA-ONLY — the
@@ -880,13 +904,8 @@ class SnapshotTable:
         later APPEND whose frame carries the dropped name re-evolves it
         additively (new files carry values, old files' bytes become
         visible again); avoid reusing dropped names without a rewrite."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot drop a column before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col not in schema.fieldNames():
                 raise ValueError(f"table {self.name}: no column {col!r}")
@@ -907,22 +926,9 @@ class SnapshotTable:
                 raise ValueError(
                     f"table {self.name}: cannot drop the last column"
                 )
-            try:
-                return self._commit(
-                    "drop-column",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(kept).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: drop_column gave up after {max_retries} retries"
-        )
+            return PendingCommit("drop-column", schema=T.StructType(kept).json())
+
+        return self._occ("drop a column", attempt, max_retries)
 
     def rename_column(self, old: str, new: str, max_retries: int = 3) -> int:
         """Iceberg `ALTER TABLE ... RENAME COLUMN`: METADATA-ONLY — the
@@ -946,13 +952,8 @@ class SnapshotTable:
         collision-free)."""
         if not re.match(r"^\w+$", new):
             raise ValueError(f"invalid column name: {new!r}")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot rename a column before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if old not in schema.fieldNames():
                 raise ValueError(f"table {self.name}: no column {old!r}")
@@ -984,22 +985,9 @@ class SnapshotTable:
                     fields.append(T.StructField(new, f.dataType, f.nullable, md))
                 else:
                     fields.append(f)
-            try:
-                return self._commit(
-                    "rename-column",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(fields).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: rename_column gave up after {max_retries} retries"
-        )
+            return PendingCommit("rename-column", schema=T.StructType(fields).json())
+
+        return self._occ("rename a column", attempt, max_retries)
 
     # Safe type promotions (the Iceberg spec's schema-evolution table,
     # plus Spark's narrower integral types): value-preserving widenings
@@ -1039,13 +1027,8 @@ class SnapshotTable:
         (spec + shadow-dir values key on the column), and live MOR
         delete keys (delete files recorded the key under the old type)."""
         field = self.spark.createDataFrame([], f"`{col}` {sql_type}").schema[0]
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot alter a column before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col not in schema.fieldNames():
                 raise ValueError(f"table {self.name}: no column {col!r}")
@@ -1077,23 +1060,11 @@ class SnapshotTable:
                 else f
                 for f in schema.fields
             ]
-            try:
-                return self._commit(
-                    "alter-column-type",
-                    meta["dirs"],
-                    cur,
-                    T.StructType(fields).json(),
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    expect_parent=cur,
-                    delete_dirs=meta.get("delete_dirs", []),
-                )
-            except CommitConflictError:
-                continue  # metadata-only: nothing to clean, just re-read
-        raise CommitConflictError(
-            f"table {self.name}: alter_column_type gave up after "
-            f"{max_retries} retries"
-        )
+            return PendingCommit(
+                "alter-column-type", schema=T.StructType(fields).json()
+            )
+
+        return self._occ("alter a column", attempt, max_retries)
 
     # ------------------------------------------- governance (r12): properties
     # TBLPROPERTIES (the Iceberg table-properties model) and CHECK
@@ -1113,35 +1084,15 @@ class SnapshotTable:
             isinstance(k, str) and isinstance(v, str) for k, v in props.items()
         ):
             raise ValueError("TBLPROPERTIES must be a non-empty str->str map")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot set properties before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             merged = {**meta.get("properties", {}), **props}
-            try:
-                return self._commit(
-                    "set-properties", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"properties": merged},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: set_properties gave up after {max_retries} retries"
-        )
+            return PendingCommit("set-properties", extra={"properties": merged})
+
+        return self._occ("set properties", attempt, max_retries)
 
     def unset_properties(self, keys: list[str], max_retries: int = 3) -> int:
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot unset properties before create"
-                )
-            meta = self._read_meta(cur)
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             props = dict(meta.get("properties", {}))
             missing = [k for k in keys if k not in props]
             if missing:
@@ -1151,18 +1102,9 @@ class SnapshotTable:
                 )
             for k in keys:
                 props.pop(k)
-            try:
-                return self._commit(
-                    "unset-properties", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"properties": props},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: unset_properties gave up after {max_retries} retries"
-        )
+            return PendingCommit("unset-properties", extra={"properties": props})
+
+        return self._occ("unset properties", attempt, max_retries)
 
     # --------------------------------------------- governance: CHECK constraints
 
@@ -1179,13 +1121,8 @@ class SnapshotTable:
         matching the SQL-standard CHECK."""
         if not re.match(r"^\w+$", name):
             raise ValueError(f"invalid constraint name: {name!r}")
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot add a constraint before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             cons = dict(meta.get("constraints", {}))
             if name in cons:
                 raise ValueError(
@@ -1202,18 +1139,9 @@ class SnapshotTable:
                     "before adding the constraint"
                 )
             cons[name] = expr
-            try:
-                return self._commit(
-                    "add-constraint", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"constraints": cons},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: add_constraint gave up after {max_retries} retries"
-        )
+            return PendingCommit("add-constraint", extra={"constraints": cons})
+
+        return self._occ("add a constraint", attempt, max_retries)
 
     def set_not_null(self, col: str, max_retries: int = 3) -> int:
         """`ALTER TABLE ... ALTER COLUMN col SET NOT NULL` (r13, VERDICT
@@ -1227,13 +1155,8 @@ class SnapshotTable:
         file-history safety) — the list survives every commit the way
         properties/constraints do, and time travel shows it AS OF each
         version."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot SET NOT NULL before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             if col not in schema.fieldNames():
                 raise ValueError(f"table {self.name}: no column {col!r}")
@@ -1253,70 +1176,34 @@ class SnapshotTable:
                     f"table {self.name}: existing rows hold NULL in "
                     f"{col!r} — clean the data before SET NOT NULL"
                 )
-            try:
-                return self._commit(
-                    "set-not-null", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"not_null": nn + [col]},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: set_not_null gave up after {max_retries} retries"
-        )
+            return PendingCommit("set-not-null", extra={"not_null": nn + [col]})
+
+        return self._occ("SET NOT NULL", attempt, max_retries)
 
     def drop_not_null(self, col: str, max_retries: int = 3) -> int:
         """`ALTER COLUMN col DROP NOT NULL`: metadata-only removal."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot DROP NOT NULL before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             nn = list(meta.get("not_null", []))
             if col not in nn:
                 raise ValueError(
                     f"table {self.name}: column {col!r} is not NOT NULL"
                 )
-            try:
-                return self._commit(
-                    "drop-not-null", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"not_null": [c for c in nn if c != col]},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: drop_not_null gave up after {max_retries} retries"
-        )
+            return PendingCommit(
+                "drop-not-null", extra={"not_null": [c for c in nn if c != col]}
+            )
+
+        return self._occ("DROP NOT NULL", attempt, max_retries)
 
     def drop_constraint(self, name: str, max_retries: int = 3) -> int:
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot drop a constraint before create"
-                )
-            meta = self._read_meta(cur)
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             cons = dict(meta.get("constraints", {}))
             if name not in cons:
                 raise ValueError(f"table {self.name}: no constraint {name!r}")
             cons.pop(name)
-            try:
-                return self._commit(
-                    "drop-constraint", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"constraints": cons},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: drop_constraint gave up after {max_retries} retries"
-        )
+            return PendingCommit("drop-constraint", extra={"constraints": cons})
+
+        return self._occ("drop a constraint", attempt, max_retries)
 
     def analyze(self, columns: list[str] | None = None, max_retries: int = 3) -> int:
         """`ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ...]`:
@@ -1330,13 +1217,8 @@ class SnapshotTable:
         Scale shape: one shuffle-light agg job (count-distinct is the
         only exchange); nothing driver-side but the 1-row result."""
         cols = list(columns or [])
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot ANALYZE before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             schema = T.StructType.fromJson(json.loads(meta["schema"]))
             missing = [c for c in cols if c not in schema.fieldNames()]
             if missing:
@@ -1367,18 +1249,9 @@ class SnapshotTable:
                     for c in cols
                 },
             }
-            try:
-                return self._commit(
-                    "analyze", meta["dirs"], cur, meta["schema"],
-                    spec=meta.get("spec", []), dir_specs=self._dir_specs(meta),
-                    expect_parent=cur, delete_dirs=meta.get("delete_dirs", []),
-                    extra={"stats": stats},
-                )
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: analyze gave up after {max_retries} retries"
-        )
+            return PendingCommit("analyze", extra={"stats": stats})
+
+        return self._occ("ANALYZE", attempt, max_retries)
 
     def _enforce_constraints(self, df: DataFrame, meta: dict) -> None:
         """Validate an incoming LOGICAL frame against the snapshot's
@@ -1463,10 +1336,7 @@ class SnapshotTable:
             else self._validate_spec(spec, df.schema)
         )
         d = self._write_data(df, spec)
-        return self._commit(
-            op, [d], cur, schema_json, spec=spec, dir_specs=[spec],
-            retry_on_race=True,
-        )
+        return self._commit(op, [d], cur, schema_json, spec=spec, dir_specs=[spec])
 
     def overwrite_partitions(
         self,
@@ -1573,11 +1443,9 @@ class SnapshotTable:
         if not new_has_files:
             # static clear with an empty source: nothing to reference
             shutil.rmtree(new_dir, ignore_errors=True)
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
             if meta.get("spec", []) != spec:
-                shutil.rmtree(new_dir, ignore_errors=True)
                 raise CommitConflictError(
                     f"table {self.name}: partition spec changed mid-overwrite"
                 )
@@ -1624,27 +1492,25 @@ class SnapshotTable:
                 dirs_out.append(sd)
                 specs_out.append(spec)
                 dirs_rewritten += 1
-            try:
-                v = self._commit(
-                    "overwrite-partitions", dirs_out, cur, schema_json,
-                    spec=spec, dir_specs=specs_out, expect_parent=cur,
-                    delete_dirs=deletes,
-                )
-                return v, {
+            return PendingCommit(
+                "overwrite-partitions",
+                dirs=dirs_out,
+                schema=schema_json,
+                dir_specs=specs_out,
+                written=scratch_dirs,  # the new partitions outlive a retry
+                audit={
                     "partitions_replaced": len(replaced),
                     "subdirs_carried": subdirs_carried,
                     "dirs_carried": dirs_carried,
                     "dirs_rewritten": dirs_rewritten,
-                }
-            except CommitConflictError:
-                for sd in scratch_dirs:  # orphaned survivor rewrites
-                    shutil.rmtree(sd, ignore_errors=True)
-                continue
-        shutil.rmtree(new_dir, ignore_errors=True)
-        raise CommitConflictError(
-            f"table {self.name}: overwrite_partitions gave up after "
-            f"{max_retries} retries"
-        )
+                },
+            )
+
+        try:
+            return self._occ("OVERWRITE", attempt, max_retries)
+        except CommitConflictError:
+            shutil.rmtree(new_dir, ignore_errors=True)
+            raise
 
     def truncate(self) -> int:
         """`TRUNCATE TABLE`: ONE metadata commit with an empty file
@@ -1659,7 +1525,7 @@ class SnapshotTable:
         meta = self._read_meta(cur)
         return self._commit(
             "truncate", [], cur, meta["schema"],
-            spec=meta.get("spec", []), dir_specs=[], retry_on_race=True,
+            spec=meta.get("spec", []), dir_specs=[],
         )
 
     @staticmethod
@@ -1903,12 +1769,9 @@ class SnapshotTable:
         NULL-key source rows match no target row and insert freely
         (duplicates among them are legal).
 
-        Commits are optimistic-concurrency checked (Iceberg commit
-        loop): the merge declares the parent snapshot it read; if a
-        concurrent writer advanced the table between read and publish,
-        the stale merge is rebuilt against the fresh head (up to
-        ``max_retries`` times) instead of silently dropping the other
-        writer's files.
+        Commits go through `_occ`: a concurrent writer makes the merge
+        rebuild against the fresh head (up to ``max_retries`` times)
+        instead of silently dropping the other writer's files.
 
         Returns (version, audit) where audit = {"dirs_rewritten": n,
         "dirs_reused": m}.
@@ -2003,80 +1866,66 @@ class SnapshotTable:
         # membership join, final write) — cache it so an expensive source
         # pipeline computes once
         source = source.persist()
-        try:
-            for _ in range(max_retries + 1):
-                cur = self.current_version()
-                if cur is None:
+
+        def attempt(cur: int, meta: dict):
+            # canonicalize the key to the TABLE schema's spelling:
+            # Spark resolves column references case-insensitively,
+            # but Python-side schema[...] lookups and the envelope
+            # cache key by exact string
+            tbl_by_lower = {
+                f.name.lower(): f.name
+                for f in T.StructType.fromJson(
+                    json.loads(meta["schema"])
+                ).fields
+            }
+            key_c = tbl_by_lower.get(key.lower())
+            if key_c is None:
+                raise ValueError(
+                    f"table {self.name}: MERGE key {key!r} is not a "
+                    "table column"
+                )
+            if clauses is None:
+                aligned = self._align_source_to_schema(source, meta["schema"])
+            else:
+                # Clause merges never pre-align: the source may carry
+                # EXTRA columns the conditions/assignments reference
+                # (a CDC feed's `op` column) — SET * / INSERT *
+                # expansions project to the table columns and
+                # type-conform per piece inside _apply_merge_clauses
+                # (Delta's SET * semantics: source must CONTAIN every
+                # table column, extras are simply not assigned).
+                # Case-INSENSITIVE membership (Spark's own resolution
+                # is case-insensitive by default, so `ON t.C_K = s.C_K`
+                # against a lowercase column is a valid statement;
+                # only Python-side checks were case-sensitive).
+                src_lower = {c.lower() for c in source.columns}
+                if key_c.lower() not in src_lower:
                     raise ValueError(
-                        f"table {self.name}: cannot MERGE before create"
+                        f"table {self.name}: MERGE source lacks the key "
+                        f"column {key_c!r}"
                     )
-                meta = self._read_meta(cur)
-                deletes = meta.get("delete_dirs", [])
-                spec = meta.get("spec", [])
-                # canonicalize the key to the TABLE schema's spelling:
-                # Spark resolves column references case-insensitively,
-                # but Python-side schema[...] lookups and the envelope
-                # cache key by exact string
-                tbl_by_lower = {
-                    f.name.lower(): f.name
-                    for f in T.StructType.fromJson(
-                        json.loads(meta["schema"])
-                    ).fields
-                }
-                key_c = tbl_by_lower.get(key.lower())
-                if key_c is None:
-                    raise ValueError(
-                        f"table {self.name}: MERGE key {key!r} is not a "
-                        "table column"
-                    )
-                key = key_c
-                if clauses is None:
-                    aligned = self._align_source_to_schema(source, meta["schema"])
-                else:
-                    # Clause merges never pre-align: the source may carry
-                    # EXTRA columns the conditions/assignments reference
-                    # (a CDC feed's `op` column) — SET * / INSERT *
-                    # expansions project to the table columns and
-                    # type-conform per piece inside _apply_merge_clauses
-                    # (Delta's SET * semantics: source must CONTAIN every
-                    # table column, extras are simply not assigned).
-                    # Case-INSENSITIVE membership (Spark's own resolution
-                    # is case-insensitive by default, so `ON t.C_K = s.C_K`
-                    # against a lowercase column is a valid statement;
-                    # only Python-side checks were case-sensitive).
-                    src_lower = {c.lower() for c in source.columns}
-                    if key.lower() not in src_lower:
+                star_used = any(
+                    s["action"] == "update" and s["set"] == "*"
+                    for s in clauses["matched"]
+                ) or any(
+                    s.get("cols") is None for s in clauses["not_matched"]
+                )
+                if star_used:
+                    tbl_cols = list(tbl_by_lower.values())
+                    missing = [
+                        c for c in tbl_cols if c.lower() not in src_lower
+                    ]
+                    if missing:
                         raise ValueError(
-                            f"table {self.name}: MERGE source lacks the key "
-                            f"column {key!r}"
+                            f"table {self.name}: MERGE SET */INSERT * "
+                            f"requires the source to contain every table "
+                            f"column; missing {missing}"
                         )
-                    star_used = any(
-                        s["action"] == "update" and s["set"] == "*"
-                        for s in clauses["matched"]
-                    ) or any(
-                        s.get("cols") is None for s in clauses["not_matched"]
-                    )
-                    if star_used:
-                        tbl_cols = list(tbl_by_lower.values())
-                        missing = [
-                            c for c in tbl_cols if c.lower() not in src_lower
-                        ]
-                        if missing:
-                            raise ValueError(
-                                f"table {self.name}: MERGE SET */INSERT * "
-                                f"requires the source to contain every table "
-                                f"column; missing {missing}"
-                            )
-                    aligned = source
-                try:
-                    return self._merge_impl(
-                        aligned, key, cur, meta, deletes, spec, clauses
-                    )
-                except CommitConflictError:
-                    continue  # re-read the head and rebuild the merge
-            raise CommitConflictError(
-                f"table {self.name}: merge gave up after {max_retries} retries"
-            )
+                aligned = source
+            return self._merge_impl(aligned, key_c, cur, meta, clauses)
+
+        try:
+            return self._occ("MERGE", attempt, max_retries)
         finally:
             source.unpersist()
 
@@ -2227,10 +2076,13 @@ class SnapshotTable:
         key: str,
         cur: int,
         meta: dict,
-        deletes: list,
-        spec: list,
         clauses: dict | None = None,
-    ) -> tuple[int, dict]:
+    ):
+        """One merge attempt against snapshot ``cur``: the PendingCommit
+        for `_occ` to publish, or (cur, audit) when the merge is a
+        no-op."""
+        deletes = meta.get("delete_dirs", [])
+        spec = meta.get("spec", [])
         # Envelope + dup-key guard in ONE pass: a per-key partial
         # aggregate (map-side combine, one key shuffle, no Expand — the
         # two-phase plan countDistinct would need) yields row count,
@@ -2576,31 +2428,15 @@ class SnapshotTable:
             if untouched or clauses is not None
             else merged.schema.json()
         )
-        try:
-            version = self._commit(
-                "merge",
-                untouched + [d_new],
-                cur,
-                schema_json,
-                spec=spec,
-                dir_specs=untouched_specs + [spec],
-                # OCC (Iceberg commit semantics): this merge carried
-                # `untouched` by reference from snapshot `cur`; if the
-                # table moved on between our _read_meta and this publish,
-                # committing would silently drop the concurrent writer's
-                # files. expect_parent makes the stale-base check raise;
-                # merge()'s retry loop rebuilds against the fresh head.
-                expect_parent=cur,
-            )
-        except CommitConflictError:
-            # the freshly written dir belongs to no snapshot — reclaim it
-            # now, or expire/GC never would
-            shutil.rmtree(d_new, ignore_errors=True)
-            raise
-        return version, {
-            "dirs_rewritten": len(touched),
-            "dirs_reused": len(untouched),
-        }
+        return PendingCommit(
+            "merge",
+            dirs=untouched + [d_new],
+            schema=schema_json,
+            dir_specs=untouched_specs + [spec],
+            delete_dirs=[],
+            written=[d_new],
+            audit={"dirs_rewritten": len(touched), "dirs_reused": len(untouched)},
+        )
 
     def _apply_merge_clauses(
         self,
@@ -2872,40 +2708,23 @@ class SnapshotTable:
         anti-joins it. O(deleted keys) write instead of O(table) —
         the delete path that stays cheap at 100 TB; `compact()`
         later folds deletes into a rewritten file set."""
-        # Append-shaped OCC (same window as merge): the delete snapshot
-        # carries the parent's dirs by reference, so a writer landing
-        # between our read and publish must conflict us — the keys and
-        # applies_to list are rebuilt against the fresh head on retry.
-        max_retries = 3
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            meta = self._read_meta(cur)
-            keys = self.read().filter(condition).select(key).distinct()
-            version = (self._versions()[-1] + 1) if self._versions() else 1
-            dd = os.path.join(self.data_dir, f"d{version:05d}-{uuid.uuid4().hex[:8]}")
+
+        def attempt(cur: int, meta: dict) -> PendingCommit:
+            keys = self.read(version=cur).filter(condition).select(key).distinct()
+            dd = os.path.join(self.data_dir, f"d{cur + 1:05d}-{uuid.uuid4().hex[:8]}")
             keys.write.mode("overwrite").parquet(dd)
-            try:
-                return self._commit(
-                    "delete-mor",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    # prior delete files carry forward so stacked deletes
-                    # compose; `applies_to` pins the data files that existed at
-                    # delete time (Iceberg's sequence-number semantics) so rows
-                    # APPENDED later under the same key are NOT swallowed
-                    delete_dirs=meta.get("delete_dirs", [])
-                    + [{"dir": dd, "key": key, "applies_to": list(meta["dirs"])}],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd, ignore_errors=True)  # orphaned delete file
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: MOR delete gave up after {max_retries} retries"
-        )
+            return PendingCommit(
+                "delete-mor",
+                # prior delete files carry forward so stacked deletes
+                # compose; `applies_to` pins the data files that existed at
+                # delete time (Iceberg's sequence-number semantics) so rows
+                # APPENDED later under the same key are NOT swallowed
+                delete_dirs=meta.get("delete_dirs", [])
+                + [{"dir": dd, "key": key, "applies_to": list(meta["dirs"])}],
+                written=[dd],
+            )
+
+        return self._occ("DELETE", attempt)
 
     def delete_where_position(self, condition, max_retries: int = 3) -> int:
         """Merge-on-read POSITION delete (Iceberg v2's second delete
@@ -2926,16 +2745,13 @@ class SnapshotTable:
 
         OCC note (r14 verdict nit, accepted): the coordinates file is
         written BEFORE the commit precondition check, so a conflicting
-        concurrent writer costs one re-scan + re-write per retry (≤4)
-        and leaves an orphan dir reclaimed by remove_orphan_files.
+        concurrent writer costs one re-scan + re-write per retry (≤4);
+        the losing attempt's dir is removed by the commit loop.
         Correct and point-shaped — the scan is the unavoidable part
         (coordinates must be found against the fresh head anyway), so
         checking first would save only the tiny parquet write."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot DELETE before create")
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict):
             hits = (
                 self._read_dirs_mor(meta, meta["dirs"], with_lineage=True)
                 .filter(condition)
@@ -2944,10 +2760,7 @@ class SnapshotTable:
                     F.col(self._POS_IDX).alias("row_index"),
                 )
             )
-            version = (self._versions()[-1] + 1) if self._versions() else 1
-            dd = os.path.join(
-                self.data_dir, f"p{version:05d}-{uuid.uuid4().hex[:8]}"
-            )
+            dd = os.path.join(self.data_dir, f"p{cur + 1:05d}-{uuid.uuid4().hex[:8]}")
             hits.write.mode("overwrite").parquet(dd)
             # prune applies_to to the dirs holding a referenced file —
             # bounded driver probe: one row per distinct FILE (metadata-
@@ -2975,25 +2788,14 @@ class SnapshotTable:
                 )
 
             applies = [d for d in meta["dirs"] if _holds(d)]
-            try:
-                return self._commit(
-                    "delete-mor-position",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    delete_dirs=meta.get("delete_dirs", [])
-                    + [{"dir": dd, "kind": "position", "applies_to": applies}],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: position delete gave up after "
-            f"{max_retries} retries"
-        )
+            return PendingCommit(
+                "delete-mor-position",
+                delete_dirs=meta.get("delete_dirs", [])
+                + [{"dir": dd, "kind": "position", "applies_to": applies}],
+                written=[dd],
+            )
+
+        return self._occ("DELETE", attempt, max_retries)
 
     def delete_where(self, condition) -> int:
         # SQL DELETE semantics: only predicate-TRUE rows go; NULL-
@@ -3024,14 +2826,8 @@ class SnapshotTable:
         dirs, zero NEW delete entries — the commit contributes no
         change rows (asserted by the registered story). No-op (current
         version returned) when fewer than two position entries exist."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(
-                    f"table {self.name}: cannot rewrite position deletes "
-                    "before create"
-                )
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict):
             deletes = meta.get("delete_dirs", [])
             pos = [dd for dd in deletes if dd.get("kind") == "position"]
             if len(pos) <= 1:
@@ -3049,31 +2845,14 @@ class SnapshotTable:
             applies = sorted(
                 {d for dd in pos for d in dd.get("applies_to", meta["dirs"])}
             )
-            try:
-                return self._commit(
-                    "rewrite-position-deletes",
-                    meta["dirs"],
-                    cur,
-                    meta["schema"],
-                    spec=meta.get("spec", []),
-                    dir_specs=self._dir_specs(meta),
-                    delete_dirs=other
-                    + [
-                        {
-                            "dir": dd_dir,
-                            "kind": "position",
-                            "applies_to": applies,
-                        }
-                    ],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(dd_dir, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: rewrite_position_deletes gave up after "
-            f"{max_retries} retries"
-        )
+            return PendingCommit(
+                "rewrite-position-deletes",
+                delete_dirs=other
+                + [{"dir": dd_dir, "kind": "position", "applies_to": applies}],
+                written=[dd_dir],
+            )
+
+        return self._occ("rewrite position deletes", attempt, max_retries)
 
     # --------------------------------------------- per-file column stats
     # Iceberg keeps per-data-file min/max/null-count in avro manifests
@@ -3366,14 +3145,9 @@ class SnapshotTable:
         (a DataFrame -> DataFrame rewriting rows), and rewritten.
         Dirs with applicable MOR delete files are force-rewritten so
         deletes fold in and no delete file survives the snapshot.
-        Optimistic-concurrency checked like merge: the commit declares
-        its parent; a concurrent writer forces a rebuild against the
-        fresh head. Returns (version, audit)."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: cannot {op} before create")
-            meta = self._read_meta(cur)
+        Returns (version, audit)."""
+
+        def attempt(cur: int, meta: dict):
             deletes = meta.get("delete_dirs", [])
             spec = meta.get("spec", [])
             hit = self._dirs_matching(meta, condition)
@@ -3396,27 +3170,16 @@ class SnapshotTable:
             rewritten = transform(self._read_dirs_mor(meta, touched))
             self._enforce_constraints(rewritten, meta)
             d_new = self._write_data(self._to_physical(rewritten, meta["schema"]), spec)
-            schema_json = meta["schema"]
-            try:
-                version = self._commit(
-                    op,
-                    untouched + [d_new],
-                    cur,
-                    schema_json,
-                    spec=spec,
-                    dir_specs=untouched_specs + [spec],
-                    expect_parent=cur,
-                )
-            except CommitConflictError:
-                shutil.rmtree(d_new, ignore_errors=True)  # orphaned rewrite
-                continue
-            return version, {
-                "dirs_rewritten": len(touched),
-                "dirs_reused": len(untouched),
-            }
-        raise CommitConflictError(
-            f"table {self.name}: {op} gave up after {max_retries} retries"
-        )
+            return PendingCommit(
+                op,
+                dirs=untouched + [d_new],
+                dir_specs=untouched_specs + [spec],
+                delete_dirs=[],  # every dir they applied to was rewritten
+                written=[d_new],
+                audit={"dirs_rewritten": len(touched), "dirs_reused": len(untouched)},
+            )
+
+        return self._occ(op, attempt, max_retries)
 
     def update_where(
         self, condition, assignments: dict, max_retries: int = 3
@@ -3505,11 +3268,8 @@ class SnapshotTable:
         commit is a CoW swap of exactly the merged dirs, so changes()
         diffs it to zero rows and a skip_change_commits tail skips it —
         rows were already emitted when they first landed."""
-        for _ in range(max_retries + 1):
-            cur = self.current_version()
-            if cur is None:
-                raise ValueError(f"table {self.name}: nothing to compact")
-            meta = self._read_meta(cur)
+
+        def attempt(cur: int, meta: dict):
             deletes = meta.get("delete_dirs", [])
             spec = meta.get("spec", [])
 
@@ -3577,25 +3337,15 @@ class SnapshotTable:
                     audit["dirs_merged"] = 0
                     return None, audit
                 merged_spec = []
-            try:
-                v = self._commit(
-                    "compact-minor",
-                    kept + [merged],
-                    cur,
-                    meta["schema"],
-                    spec=spec,
-                    dir_specs=kept_specs + [merged_spec],
-                    expect_parent=cur,
-                    delete_dirs=deletes,
-                )
-                return v, audit
-            except CommitConflictError:
-                shutil.rmtree(merged, ignore_errors=True)
-                continue
-        raise CommitConflictError(
-            f"table {self.name}: compact_minor gave up after "
-            f"{max_retries} retries"
-        )
+            return PendingCommit(
+                "compact-minor",
+                dirs=kept + [merged],
+                dir_specs=kept_specs + [merged_spec],
+                written=[merged],
+                audit=audit,
+            )
+
+        return self._occ("compact", attempt, max_retries)
 
     def _merge_dirs_arrow(self, dirs: list[str], cur: int) -> str | None:
         """Concat the parquet files of flat dirs into ONE file in a new
@@ -3645,9 +3395,6 @@ class SnapshotTable:
             spec=meta.get("spec", []),
             dir_specs=self._dir_specs(meta),
             delete_dirs=meta.get("delete_dirs", []),
-            # rollback replaces the head with a pinned historical file set —
-            # the user's explicit "restore v{version}" wins a publish race
-            retry_on_race=True,
         )
 
     # ------------------------------------------------------- branch refs
@@ -3738,37 +3485,11 @@ class SnapshotTable:
         on; if a concurrent writer moved the branch first, the append
         rebuilds against the new head (its superseded snapshot stays in
         the log as auditable history until expire_snapshots)."""
-        for _ in range(max_retries + 1):
-            parent = self.get_ref(branch)
-            pmeta = self._read_meta(parent)
-            spec = pmeta.get("spec", [])
-            aligned, schema_json = self._align_append_to_schema(df, pmeta["schema"])
-            self._enforce_constraints(aligned, pmeta)
-            d = self._write_data(self._to_physical(aligned, schema_json), spec)
-            v = self._commit(
-                f"append@{branch}",
-                pmeta["dirs"] + [d],
-                parent,
-                schema_json,
-                spec=spec,
-                dir_specs=self._dir_specs(pmeta) + [spec],
-                # parent dirs ride by reference ⇒ so must the parent's
-                # MOR delete files (same hazard as evolve_partitioning)
-                delete_dirs=pmeta.get("delete_dirs", []),
-                # a lost publish race only needs the next free version slot:
-                # this snapshot's dirs are parented to the BRANCH REF,
-                # not the global latest, so re-sequencing can never
-                # republish a stale dirs list
-                retry_on_race=True,
-            )
-            try:
-                self.set_ref(branch, v, expect=parent)
-                return v
-            except CommitConflictError:
-                continue  # branch moved first: rebuild on the new head
-        raise CommitConflictError(
-            f"table {self.name}: branch append on {branch!r} gave up after "
-            f"{max_retries} retries"
+        return self._occ(
+            f"append to branch {branch!r}",
+            self._append_attempt(df, op=f"append@{branch}"),
+            max_retries,
+            branch=branch,
         )
 
     def is_ancestor(self, ancestor: int, descendant: int) -> bool:

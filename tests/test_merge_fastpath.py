@@ -242,10 +242,8 @@ def test_merge_kind_mismatched_envelope_routes_to_rewrite(spark):
     with pytest.raises(ValueError, match="not assignable"):
         t.merge(src, key="k")
     # layer 2: the internal path rewrites instead of silently carrying
-    cur = t.current_version()
-    meta = t._read_meta(cur)
-    _, audit = t._merge_impl(
-        src, "k", cur, meta, [], meta.get("spec", []), None
+    _, audit = t._occ(
+        "MERGE", lambda cur, meta: t._merge_impl(src, "k", cur, meta)
     )
     assert audit["dirs_rewritten"] == 1, audit
     rows = {(str(r["k"]), r["v"]) for r in t.read().collect()}
